@@ -110,14 +110,16 @@ def main() -> None:
     for name, offsets in OFFSETS.items():
         df = spark.read.parquet(f"{SRC}/{name}.parquet")
         big = replicate(df, offsets, times, tag_text=(name == "documents"))
-        # one output file per copy: each file mirrors the source fixture's
-        # shape (the sf0.1 fixtures are single-file single-row-group), so a
-        # xN dataset scans with N-way parallelism like the driver's own
-        # escalated data does (BENCH_r05 sf1 tpch_q6 = 0.17s is only
-        # possible with a multi-split lineitem). A broadcast-crossJoin
-        # replicate otherwise writes ONE 6M-row row group, and every scan
-        # becomes a single-task straggler — which mis-measures every
-        # downstream query.
+        # N output files, one per round-robin partition: repartition(times)
+        # deals rows across the files without regard to which copy they
+        # came from, so each file holds a slice of every copy (not one copy
+        # per file). What matters is the count: a xN dataset scans with
+        # N-way parallelism like the escalated sf1 data does
+        # (BENCH_r05 sf1 tpch_q6 = 0.17s is only possible with a
+        # multi-split lineitem). A broadcast-crossJoin replicate otherwise
+        # writes ONE 6M-row row group, and every scan becomes a single-task
+        # straggler — which mis-measures every downstream query. The
+        # recorded sf1 numbers were measured on this layout; keep it.
         big.repartition(times).write.mode("overwrite").parquet(
             f"{out}/{name}.parquet"
         )

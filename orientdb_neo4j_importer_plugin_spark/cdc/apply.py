@@ -36,6 +36,7 @@ from __future__ import annotations
 import datetime
 from dataclasses import dataclass, field
 
+from pyspark.serializers import CPickleSerializer
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
@@ -49,7 +50,7 @@ from ..lake.table import (
     bucket_expr,
 )
 from ..schema import CDC_META_COLUMNS
-from .lww import lww_resolve, lww_resolve_with_stats
+from .lww import lww_resolve_with_stats
 
 def poison_reason_expr(
     events_schema: StructType,
@@ -129,7 +130,6 @@ def apply_changes(
     lineage_extra: dict | None = None,
     mode: str = "cow",
     collect_stats: bool = True,
-    stats_via_observation: bool = True,
     event_filter: Column | None = None,
     quarantine: bool = False,
     extra_lineage_stats: dict[str, Column] | None = None,
@@ -150,25 +150,23 @@ def apply_changes(
         high-frequency small batches (the 10^10-events/day regime); pair
         with periodic compaction (streaming runner's compact_every).
 
-    collect_stats=False skips the per-batch counter jobs (events_in, lsn
-    range, per-op counts) — with mode="mor" the apply then runs ZERO driver
-    collects, only the LWW aggregate + delta write (max sustained
-    throughput; counters report -1).
-
-    stats_via_observation=True rides the winner counters on the write job
-    (no extra action). MUST be False when called from foreachBatch: a
-    streaming micro-batch's incremental execution reports observed metrics
-    through StreamingQueryProgress, so Observation.get would block forever.
+    Batch counters (events_in, lsn range, keys/deletes/upserts, touched
+    buckets, event-time max) ride the LWW aggregate as per-key stats. In
+    mode="mor" they are summed by an Observation on the delta write itself,
+    so the apply is the LWW aggregate plus the write and nothing else; COW
+    collects them from the persisted winners first, because the rewrite
+    must know its touched buckets before it reads them.
 
     event_filter (optional) excludes rows from the merge as *policy* (e.g.
     late-data drop); they are counted in res.filtered_out. quarantine=True
     diverts poison rows (see poison_reason_expr) to the table's quarantine
     side table with a reason column instead of failing the batch — the
     reference's per-record error isolation (``Migrator:274-283,585-594``);
-    counted in res.quarantined. extra_lineage_stats are caller aggregate
-    expressions evaluated in the SAME single stats job (no extra actions)
-    and recorded in lineage + res.extra. All per-batch counters therefore
-    cost exactly one aggregate job.
+    counted in res.quarantined. Both need one aggregate job over the raw
+    batch, which also evaluates extra_lineage_stats (caller aggregate
+    expressions, recorded in lineage + res.extra).
+
+    collect_stats has no effect; it is kept so existing callers still bind.
     """
     if mode not in ("cow", "mor"):
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
@@ -207,55 +205,27 @@ def apply_changes(
     )
     keep = flt & reason.isNull() if reason is not None else flt
     extra_stats = extra_lineage_stats or {}
+    admission = event_filter is not None or reason is not None or bool(extra_stats)
 
-    # --- stats over the raw batch: ONE job yields total/filtered/quarantined
-    # counts, the lsn range, the touched-bucket set (cheap key hash — no LWW
-    # evaluation needed for pruning) and any caller extras ------------------
-    touched: list[int] | None = None
-    batch_ts_max = None
-    has_ts = "ts" in events.columns
-    # fold-stats fast path: with no admission predicates and no caller
-    # extras, EVERY counter rides the LWW aggregate itself — per-key stats
-    # in the same map-side-combinable shuffle, globals from the (persisted)
-    # winners. Removes the separate raw-batch stats scan, which measured as
-    # ~58% of MOR apply wall time at sf0.1.
-    fold_stats = (
-        collect_stats
-        and event_filter is None
-        and reason is None
-        and not extra_stats
-    )
-    if collect_stats and not fold_stats:
+    # --- raw-batch stats: only admission predicates and caller extras need
+    # a pass over the raw batch (filtered/quarantined counts, extras); ONE
+    # job, which also answers whether anything is left to merge -----------
+    if admission:
         agg = events.agg(
             F.count(F.lit(1)).alias("n_total"),
             F.sum((~flt).cast("long")).alias("n_filtered"),
             F.sum((flt & reason.isNotNull()).cast("long")).alias("n_quar")
             if reason is not None
             else F.lit(0).alias("n_quar"),
-            F.min(F.when(keep, F.col("lsn"))).alias("lo"),
-            F.max(F.when(keep, F.col("lsn"))).alias("hi"),
-            F.collect_set(F.when(keep, bucket_expr(key, nb, pk_t))).alias("buckets"),
-            # event-time max over rows passing the FULL keep predicate: a
-            # quarantined row's corrupt future timestamp must never advance
-            # the committed watermark (it would late-drop all good events)
-            F.max(F.when(keep, F.col("ts")) if has_ts else F.lit(None)).alias(
-                "__ts_max"
-            ),
             *[e.alias(f"__x_{n}") for n, e in extra_stats.items()],
         ).collect()[0]
         res.filtered_out = agg["n_filtered"] or 0
         res.quarantined = agg["n_quar"] or 0
         res.events_in = agg["n_total"] - res.filtered_out - res.quarantined
-        res.lsn_min, res.lsn_max = agg["lo"], agg["hi"]
-        touched = sorted(agg["buckets"])
-        batch_ts_max = agg["__ts_max"]
         res.extra = {n: _jsonable(agg[f"__x_{n}"]) for n in extra_stats}
-    elif not collect_stats:
-        res.events_in = -1
-        res.filtered_out = res.quarantined = -1
 
     # --- quarantine write: poison rows become queryable, the batch commits -
-    if reason is not None and (res.quarantined > 0 or not collect_stats):
+    if res.quarantined:
         table.quarantine_append(
             events.filter(flt & reason.isNotNull()).select(
                 F.lit(str(batch_id)).alias("batch_id"),
@@ -270,14 +240,34 @@ def apply_changes(
     if event_filter is not None or reason is not None:
         events = events.filter(keep)
 
-    lineage_base = {
+    lineage = {
         **{n: _jsonable(v) for n, v in res.extra.items()},
         **(lineage_extra or {}),
     }
     if res.filtered_out:
-        lineage_base["filtered_out"] = res.filtered_out
+        lineage["filtered_out"] = res.filtered_out
     if res.quarantined:
-        lineage_base["quarantined"] = res.quarantined
+        lineage["quarantined"] = res.quarantined
+
+    # --- dedup + LWW: one algebraic aggregate does both --------------------
+    # Duplicate deliveries (same lsn, same row) collapse in the same max()
+    # that resolves the winner — no separate dropDuplicates pass. Per-key
+    # stats ride the same map-side-combinable shuffle; the globals below
+    # sum them over the (few) winner rows, never over the raw batch.
+    has_ts = "ts" in events.columns
+    winners = lww_resolve_with_stats(
+        events, keys=keys, ts_col="ts" if has_ts else None
+    ).withColumn(BUCKET_COL, bucket_expr(key, nb, pk_t))
+    stats = [
+        F.coalesce(F.sum("__n_events"), F.lit(0)).alias("n"),
+        F.min("__lsn_min").alias("lo"),
+        F.max("lsn").alias("hi"),
+        F.count(F.lit(1)).alias("k"),
+        F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("d"),
+        F.collect_set(F.col(BUCKET_COL)).alias("buckets"),
+        *([F.max("__ts_max").alias("tmax")] if has_ts else []),
+    ]
+
     def _cumulative_hwm(batch_max):
         # CUMULATIVE event-time high watermark: carrying forward the last
         # committed value keeps the watermark monotone even after the entry
@@ -293,71 +283,27 @@ def apply_changes(
         cur_hwm = _jsonable(batch_max) if batch_max is not None else None
         return max((x for x in (prev_hwm, cur_hwm) if x is not None), default=None)
 
-    if collect_stats and not fold_stats and has_ts:
-        hwm = _cumulative_hwm(batch_ts_max)
-        if hwm is not None:
-            lineage_base["event_ts_max"] = hwm
-
-    winners = None
-    if fold_stats:
-        winners = (
-            lww_resolve_with_stats(
-                events, keys=keys, ts_col="ts" if has_ts else None
-            )
-            .withColumn(BUCKET_COL, bucket_expr(key, nb, pk_t))
-            .persist()
-        )
-        g = winners.agg(
-            F.coalesce(F.sum("__n_events"), F.lit(0)).alias("n"),
-            F.min("__lsn_min").alias("lo"),
-            F.max("lsn").alias("hi"),
-            F.count(F.lit(1)).alias("k"),
-            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("d"),
-            F.collect_set(F.col(BUCKET_COL)).alias("buckets"),
-            F.max(F.col("__ts_max") if has_ts else F.lit(None)).alias("tmax"),
-        ).collect()[0]
-        res.events_in = int(g["n"])
-        res.filtered_out = res.quarantined = 0
-        res.lsn_min, res.lsn_max = g["lo"], g["hi"]
-        res.keys_changed = g["k"]
-        res.deletes = g["d"] or 0
-        res.upserts = res.keys_changed - res.deletes
-        touched = sorted(g["buckets"])
+    def counters(g) -> dict:
+        """Lineage counters from one row of `stats`."""
+        if not g["n"]:
+            return {"events_in": 0}
+        k, dl = g["k"], g["d"] or 0
+        out = {
+            "events_in": int(g["n"]),
+            "lsn_range": [g["lo"], g["hi"]],
+            "keys_changed": k,
+            "deletes": dl,
+            "upserts": k - dl,
+            "touched_buckets": sorted(g["buckets"]),
+        }
         if has_ts:
+            # over admitted rows only: a quarantined row's corrupt future
+            # timestamp must never advance the committed watermark (it
+            # would late-drop all good events)
             hwm = _cumulative_hwm(g["tmax"])
             if hwm is not None:
-                lineage_base["event_ts_max"] = hwm
-
-    if res.events_in == 0:
-        if winners is not None:
-            winners.unpersist()
-        # empty-feed no-op (reference: shouldImportEmptyDb) — still ledger the
-        # batch id so a replayed empty batch stays a no-op.
-        new = table.commit_bucket_rewrite(
-            table.spark.createDataFrame(
-                [],
-                StructType(schema.fields + [StructField(BUCKET_COL, IntegerType(), True)]),
-            ),
-            touched_buckets=[],
-            batch_id=batch_id,
-            new_schema=schema,
-            lineage={**lineage_base, "events_in": 0},
-        )
-        res.snapshot_version = new.version
-        return res
-
-    # --- dedup + LWW: one algebraic aggregate does both --------------------
-    # Duplicate deliveries (same lsn, same row) collapse in the same max()
-    # that resolves the winner — no separate dropDuplicates pass needed here.
-    # (fold_stats built winners above, with stats riding the aggregate.)
-    if winners is None:
-        winners = lww_resolve(events, keys=keys).withColumn(
-            BUCKET_COL, bucket_expr(key, nb, pk_t)
-        )
-    lineage = {
-        "lsn_range": [res.lsn_min, res.lsn_max],
-        **lineage_base,
-    }
+                out["event_ts_max"] = hwm
+        return out
 
     # --- incoming winners as storage rows: payload + __lsn + __deleted. ----
     # Deletes become tombstones so that a later-arriving batch with lower
@@ -381,79 +327,62 @@ def apply_changes(
             F.col(BUCKET_COL),
         )
 
-    if mode == "mor" and not collect_stats:
-        # zero-driver-collect fast path: LWW + delta append, one Spark job
-        new_snap = table.commit_delta_append(
-            to_storage(winners),
+    def empty_commit() -> ApplyResult:
+        # empty-feed no-op (reference: shouldImportEmptyDb) — still ledger the
+        # batch id so a replayed empty batch stays a no-op.
+        new = table.commit_bucket_rewrite(
+            table.spark.createDataFrame(
+                [],
+                StructType(schema.fields + [StructField(BUCKET_COL, IntegerType(), True)]),
+            ),
             touched_buckets=[],
             batch_id=batch_id,
             new_schema=schema,
-            lineage={**lineage, "stats": "skipped"},
-            base_snapshot=snap,  # bucket ids derive from snap's layout
+            lineage={**lineage, "events_in": 0},
         )
-        res.keys_changed = res.deletes = res.upserts = -1
-        res.snapshot_version = new_snap.version
+        res.events_in = 0
+        res.snapshot_version = new.version
         return res
 
-    if touched is None:
-        # stats were skipped but COW still needs the pruning set: one cheap
-        # distinct over the raw batch's bucket expression (no LWW evaluated)
-        touched = sorted(
-            r["b"]
-            for r in events.select(bucket_expr(key, nb, pk_t).alias("b")).distinct().collect()
+    if res.events_in == 0 and admission:
+        return empty_commit()
+
+    if mode == "mor":
+        # counters ride the WRITE job via an Observation — no extra driver
+        # action; deferred into the commit's metadata build, which runs
+        # after the data write (metrics ready) and lands them in lineage
+        # atomically with the snapshot (multi-writer safe). The write runs
+        # in the winners' own session, which is where the Observation
+        # completes (a foreachBatch batch lives in a cloned session).
+        obs = Observation()
+
+        def lineage_fn() -> dict:
+            # an EMPTY metrics row means Spark pruned the observed branch as
+            # provably empty (AQE empty-relation propagation): no events.
+            # Observation.get fails on that row, so fetch it once and convert
+            # it the way Observation.get does (pyspark 4.1.2 internals).
+            jrow = obs._jo.getRow()
+            if not jrow.length():
+                return counters({"n": 0})
+            utils = getattr(obs._jvm, "org.apache.spark.sql.api.python.PythonSQLUtils")
+            return counters(CPickleSerializer().loads(utils.toPyRow(jrow)))
+
+        new_snap = table.commit_delta_append(
+            to_storage(winners.observe(obs, *stats)),
+            touched_buckets=[],
+            batch_id=batch_id,
+            new_schema=schema,
+            lineage=lineage,
+            lineage_fn=lineage_fn,
+            base_snapshot=snap,  # bucket ids derive from snap's layout
         )
-    res.touched_buckets = len(touched)
-    lineage["events_in"] = res.events_in
-
-    # winner counts ride along the WRITE job via an Observation — no extra
-    # driver action (matters at 1 batch/min x 1000 executors)
-    obs = Observation() if stats_via_observation and not fold_stats else None
-    winners = winners.persist()
-    try:
-        incoming = to_storage(winners)
-        if fold_stats:
-            # counters already came back with the fold agg
-            lineage.update(
-                {
-                    "keys_changed": res.keys_changed,
-                    "deletes": res.deletes,
-                    "upserts": res.upserts,
-                }
-            )
-            lineage_fn = None
-        elif obs is not None:
-            incoming = incoming.observe(
-                obs,
-                F.count(F.lit(1)).alias("k"),
-                F.sum(F.when(F.col(DELETED_COL), 1).otherwise(0)).alias("d"),
-            )
-
-            # deferred into the commit's metadata build: runs after the data
-            # write (metrics ready), lands in lineage atomically with the
-            # snapshot — no post-commit in-place rewrite (multi-writer safe)
-            def lineage_fn() -> dict:
-                m = obs.get
-                k, dl = m["k"], m["d"] or 0
-                return {"keys_changed": k, "deletes": dl, "upserts": k - dl}
-        else:
-            counted = winners.agg(
-                F.count(F.lit(1)).alias("k"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("d"),
-            ).collect()[0]
-            k, dl = counted["k"], counted["d"] or 0
-            lineage.update({"keys_changed": k, "deletes": dl, "upserts": k - dl})
-            lineage_fn = None
-        if mode == "mor":
-            new_snap = table.commit_delta_append(
-                incoming,
-                touched_buckets=touched,
-                batch_id=batch_id,
-                new_schema=schema,
-                lineage=lineage,
-                lineage_fn=lineage_fn,
-                base_snapshot=snap,  # bucket ids derive from snap's layout
-            )
-        else:
+    else:
+        winners = winners.persist()
+        try:
+            lineage.update(counters(winners.agg(*stats).collect()[0]))
+            if lineage["events_in"] == 0:
+                return empty_commit()
+            touched = lineage["touched_buckets"]
             # read and rewrite from the SAME snapshot, and tell the commit
             # which one: conflict validation must cover the window between
             # this read and the commit (a concurrent delta landing in a
@@ -482,7 +411,7 @@ def apply_changes(
             # clusters the primary key (bucket is a function of the
             # partition key), so the aggregate runs without a further
             # exchange, and the write still lands one file per bucket dir.
-            unioned = existing.unionByName(incoming, allowMissingColumns=True)
+            unioned = existing.unionByName(to_storage(winners), allowMissingColumns=True)
             unioned = unioned.repartition(
                 max(len(touched), 1), F.col(BUCKET_COL)
             )
@@ -510,24 +439,30 @@ def apply_changes(
                 batch_id=batch_id,
                 new_schema=schema,
                 lineage=lineage,
-                lineage_fn=lineage_fn,
                 base_snapshot=base_snap,
             )
-        # counters come back through committed lineage (works even when a
-        # concurrent writer committed the same batch_id first — their entry
-        # carries the same winners); never block on obs.get here: on a
-        # replay no-op the write job may not have run at all
-        last = new_snap.lineage[-1] if new_snap.lineage else {}
-        if last.get("batch_id") == batch_id and "keys_changed" in last:
-            res.keys_changed = last["keys_changed"]
-            res.deletes = last["deletes"]
-            res.upserts = last["upserts"]
-        else:
-            res.keys_changed = res.deletes = res.upserts = -1
-        res.snapshot_version = new_snap.version
-        return res
-    finally:
-        winners.unpersist()
+        finally:
+            winners.unpersist()
+    # counters come back through committed lineage (works even when a
+    # concurrent writer committed the same batch_id first — their entry
+    # carries the same winners); never block on obs.get here: on a replay
+    # no-op the write job may not have run at all
+    last = new_snap.lineage[-1] if new_snap.lineage else {}
+    if last.get("batch_id") == batch_id and "events_in" in last:
+        res.events_in = last["events_in"]
+        res.lsn_min, res.lsn_max = last.get("lsn_range", [None, None])
+        res.keys_changed = last.get("keys_changed", 0)
+        res.deletes = last.get("deletes", 0)
+        res.upserts = last.get("upserts", 0)
+        res.touched_buckets = len(last["touched_buckets"])
+    else:
+        # the committed entry is another writer's: counts unknown (-1),
+        # except events_in when the raw-batch admission job measured it
+        res.keys_changed = res.deletes = res.upserts = -1
+        if not admission:
+            res.events_in = -1
+    res.snapshot_version = new_snap.version
+    return res
 
 
 def apply_patch_changes(

@@ -196,7 +196,6 @@ class StreamedCellView(ABC):
                 batch_id=f"{self.VIEW_TAG}-{from_v}-{snap.version}",
                 mode=mode,
                 lineage_extra={self._lineage_key: snap.version},
-                stats_via_observation=False,
             )
         finally:
             delta.unpersist(blocking=False)

@@ -137,7 +137,6 @@ class MirrorRunner(CdcStreamRunner):
             self.table,
             batch_id=f"{self.batch_id_prefix}-{batch_id}",
             mode=self.mode,
-            stats_via_observation=False,
             lineage_extra=(
                 {"mirror_source_version": int(vmax)} if vmax is not None else None
             ),

@@ -77,10 +77,11 @@ class StreamMetrics:
         if r.skipped_replay:
             self.replayed_batches += 1
             return
-        self.events_in += r.events_in
-        self.keys_changed += r.keys_changed
-        self.upserts += r.upserts
-        self.deletes += r.deletes
+        # -1 means "unknown" (another writer committed this batch_id first)
+        self.events_in += max(r.events_in, 0)
+        self.keys_changed += max(r.keys_changed, 0)
+        self.upserts += max(r.upserts, 0)
+        self.deletes += max(r.deletes, 0)
         self.late_dropped += max(r.filtered_out, 0)
         self.quarantined += max(r.quarantined, 0)
         self.last_snapshot_version = r.snapshot_version
@@ -277,8 +278,9 @@ class CdcStreamRunner:
     def _for_each_batch(self, batch: DataFrame, batch_id: int) -> None:
         # Late-data policy: drop events older than (committed hwm - delay).
         # The cutoff comes from lineage metadata (no Spark action); the drop
-        # count and the batch ts-max ride apply_changes' single stats job —
-        # one aggregate action per micro-batch total (VERDICT r01 item 6).
+        # count rides apply_changes' single raw-batch stats job and the batch
+        # ts-max the delta write's Observation — one aggregate action per
+        # micro-batch total (VERDICT r01 item 6).
         flt = None
         if self.late_drop_delay_seconds is not None:
             hwm = self._hwm()
@@ -300,9 +302,6 @@ class CdcStreamRunner:
             self.table,
             batch_id=f"{self.batch_id_prefix}-{batch_id}",
             mode=self.mode,
-            # foreachBatch incremental execution never delivers Observation
-            # results -> counters must use a plain aggregate action here
-            stats_via_observation=False,
             event_filter=flt,
             quarantine=self.quarantine,
         )

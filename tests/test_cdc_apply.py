@@ -59,6 +59,64 @@ def test_feed_empty(spark, tmp_path):
     assert table.is_batch_committed("b0")
 
 
+def test_mor_apply_job_count(spark, tmp_path):
+    """A small MOR apply runs the LWW aggregate and the delta write, and
+    nothing else: its counters ride the write on an Observation instead
+    of a collect of their own."""
+    feed = gen_feed(spark, n_convs=4, turns_per_conv=5, updates_per_key=1,
+                    delete_every=4, duplicate=True)
+    batch = spark.createDataFrame(feed.collect(), feed.schema)  # no scan job
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPTS_V1, "conv_id", num_buckets=4
+    )
+    sc = spark.sparkContext
+    group = f"mor-apply-{os.getpid()}-{id(table)}"
+    sc.setJobGroup(group, "MOR apply job-count guard")
+    try:
+        res = apply_changes(batch, table, batch_id="m0", mode="mor")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 3, jobs
+    n_keys = 4 * 5
+    assert (res.events_in, res.keys_changed) == (batch.count(), n_keys)
+    assert res.deletes == len([i for i in range(n_keys) if i % 4 == 1])
+    assert res.upserts == n_keys - res.deletes
+    lin = table.current().lineage[-1]
+    assert lin["keys_changed"] == n_keys and lin["touched_buckets"]
+
+
+@pytest.mark.parametrize("kind", ["all_filtered", "empty"])
+def test_mor_empty_batch_is_ledgered(spark, tmp_path, kind):
+    """A MOR batch with nothing to merge (every row filtered by policy, or
+    no rows at all) still ledgers its batch id with events_in == 0, and a
+    replay of it is a no-op that leaves the version alone."""
+    from pyspark.sql import functions as F
+
+    feed = gen_feed(spark, n_convs=2, turns_per_conv=3)
+    table = SnapshotTable.create(
+        spark, str(tmp_path / "t"), TRANSCRIPTS_V1, "conv_id", num_buckets=4
+    )
+    apply_changes(feed, table, batch_id="m0", mode="mor")
+    before = final_state(table)
+    if kind == "empty":
+        batch, kw = feed.limit(0), {}
+    else:
+        batch, kw = feed, {"event_filter": F.lit(False)}
+    res = apply_changes(batch, table, batch_id="m1", mode="mor", **kw)
+    v = table.current().version
+    assert res.events_in == 0 and res.snapshot_version == v
+    assert res.filtered_out == (6 if kind == "all_filtered" else 0)
+    lin = table.current().lineage[-1]
+    assert lin["batch_id"] == "m1" and lin["events_in"] == 0
+    assert table.is_batch_committed("m1")
+    again = apply_changes(batch, table, batch_id="m1", mode="mor", **kw)
+    assert again.skipped_replay and again.snapshot_version == v
+    assert table.current().version == v
+    assert final_state(table) == before
+
+
 def test_feed_inserts_only(spark, tmp_path):
     feed = gen_feed(spark, n_convs=3, turns_per_conv=10)
     table, feed_dir = run_fixture(spark, tmp_path, feed, TRANSCRIPTS_V1, "ins")

@@ -215,7 +215,6 @@ def test_apply_patch_quarantine_and_filter_on_raw_events(spark, tmp_path):
     res = apply_patch_changes(
         batch, table, batch_id="p", mode="mor",
         event_filter=F.col("lsn") != 12, quarantine=True,
-        stats_via_observation=False,
     )
     assert _state(table) == {"k1": ("a0", "b9")}
     assert (res.events_in, res.filtered_out, res.quarantined) == (1, 1, 1)

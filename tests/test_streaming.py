@@ -5,12 +5,18 @@ job-lifecycle semantics (ONeo4jImporterJob.java:74,102).
 """
 
 import datetime
+import glob
 import json
 import os
 import shutil
 import time
 
+import duckdb
+import pytest
+from pyspark.sql.types import StringType
+
 from orientdb_neo4j_importer_plugin_spark.feedgen import gen_feed, write_feed_chunks
+from orientdb_neo4j_importer_plugin_spark.functions.xxhash import spark_xxhash64
 from orientdb_neo4j_importer_plugin_spark.lake import SnapshotTable
 from orientdb_neo4j_importer_plugin_spark.oracle import (
     reduce_events_duckdb,
@@ -237,6 +243,141 @@ def test_stream_quarantine_poison_records(spark, tmp_path):
     assert ok, msg
     status = json.load(open(runner.status_path))
     assert status["quarantined"] == 2
+
+
+def _source_batches(ckpt_dir):
+    """Micro-batch id -> the files it read, from the file source's
+    metadata log in the checkpoint (compacted log files repeat entries)."""
+    out = {}
+    for p in glob.glob(os.path.join(ckpt_dir, "sources", "0", "*")):
+        if os.path.basename(p).startswith("."):
+            continue
+        with open(p) as fh:
+            for line in fh:
+                if line.startswith("{"):
+                    e = json.loads(line)
+                    path = e["path"].removeprefix("file://")
+                    out.setdefault(int(e["batchId"]), set()).add(path)
+    return out
+
+
+COUNTERS = ("events_in", "keys_changed", "deletes", "upserts", "lsn_range",
+            "touched_buckets", "event_ts_max", "filtered_out", "quarantined")
+
+
+def _duckdb_counters(batches, num_buckets, delay=None, quarantine=False):
+    """Per micro-batch lineage counters, recomputed in DuckDB from the
+    batch's files alone: the late-drop cutoff follows the cumulative
+    event-time watermark of the admitted rows of earlier batches, poison
+    rows are set aside like the engine's quarantine, and touched buckets
+    come from the driver-side xxhash64 of each admitted conv_id."""
+    con = duckdb.connect()
+    hwm, out = None, {}
+    for b in sorted(batches):
+        files = sorted(batches[b])
+        flt = (
+            "TRUE" if delay is None or hwm is None
+            else f"(ts IS NULL OR ts >= TIMESTAMP '{hwm}' - INTERVAL {delay} SECOND)"
+        )
+        poison = (
+            "(lsn IS NULL OR op IS NULL OR op NOT IN ('I', 'U', 'D') "
+            "OR conv_id IS NULL OR turn_idx IS NULL)" if quarantine else "FALSE"
+        )
+        con.execute(
+            f"CREATE OR REPLACE TEMP VIEW ev AS SELECT lsn, op, conv_id, "
+            f"turn_idx, ts::TIMESTAMP AS ts, {flt} AS flt, {poison} AS poison "
+            f"FROM read_parquet({files!r}, union_by_name=true)"
+        )
+        con.execute("CREATE OR REPLACE TEMP VIEW adm AS "
+                    "SELECT * FROM ev WHERE flt AND NOT poison")
+        n, lo, hi, tmax = con.execute(
+            "SELECT count(*), min(lsn), max(lsn), max(ts) FROM adm").fetchone()
+        filtered, quar = con.execute(
+            "SELECT count(*) FILTER (WHERE NOT flt), "
+            "count(*) FILTER (WHERE flt AND poison) FROM ev").fetchone()
+        k, d = con.execute(
+            "SELECT count(*), count(*) FILTER (WHERE op = 'D') FROM "
+            "(SELECT arg_max(op, lsn) AS op FROM adm GROUP BY conv_id, turn_idx)"
+        ).fetchone()
+        convs = [r[0] for r in con.execute("SELECT DISTINCT conv_id FROM adm").fetchall()]
+        exp = {"events_in": n}
+        if n:
+            hwm = max(x for x in (hwm, tmax) if x is not None)
+            exp.update(
+                keys_changed=k, deletes=d, upserts=k - d, lsn_range=[lo, hi],
+                touched_buckets=sorted(
+                    {spark_xxhash64(c, StringType()) % num_buckets for c in convs}
+                ),
+                event_ts_max=str(hwm),
+            )
+        if filtered:
+            exp["filtered_out"] = filtered
+        if quar:
+            exp["quarantined"] = quar
+        out[b] = {c: exp.get(c) for c in COUNTERS}
+    return out
+
+
+@pytest.mark.parametrize("admission", [False, True], ids=["plain", "late_quarantine"])
+def test_stream_mor_lineage_counters_match_duckdb(spark, tmp_path, admission):
+    """Every MOR micro-batch's lineage counters (summed by an Observation
+    on the delta write inside foreachBatch) equal the same counters
+    recomputed in DuckDB from the files the checkpoint says the batch
+    read. The admission variant adds a late-drop policy and quarantine: a
+    second run over the same checkpoint meets a late event and poison rows,
+    one of them carrying a far-future timestamp that must not reach the
+    committed watermark (event_ts_max)."""
+    feed = gen_feed(spark, n_convs=6, turns_per_conv=8, updates_per_key=2,
+                    delete_every=5, duplicate=True)
+    feed_dir = str(tmp_path / "feed_cnt")
+    write_feed_chunks(feed, feed_dir, chunk_size=40)
+    kw = dict(late_drop_delay_seconds=10, quarantine=True) if admission else {}
+    runner = make_runner(spark, tmp_path, "cnt", feed_dir, mode="mor",
+                         max_files_per_trigger=2, **kw)
+    runner.run_to_completion(timeout_sec=300)
+    if admission:
+        late_ts = datetime.datetime(2020, 1, 1)
+        extra = spark.createDataFrame(
+            [
+                (10_000, "U", "conv_000000", 0, "user", "late", late_ts, 0),
+                (10_001, "U", "conv_000001", 1, "user", "fresh", None, 0),
+                (9_000_001, "X", "conv_q", 0, "user", "bad op",
+                 datetime.datetime(2099, 1, 1), 0),
+                (None, "I", "conv_q", 1, "user", "null lsn", None, 0),
+            ],
+            "lsn long, op string, conv_id string, turn_idx int, role string, "
+            "text string, ts timestamp, source_part int",
+        )
+        xdir = str(tmp_path / "extra_chunk")
+        extra.coalesce(1).write.parquet(xdir)
+        for f in os.listdir(xdir):
+            if f.endswith(".parquet"):
+                shutil.copy(os.path.join(xdir, f),
+                            os.path.join(feed_dir, "chunk-zzz.parquet"))
+        runner = make_runner(spark, tmp_path, "cnt", feed_dir, mode="mor",
+                             max_files_per_trigger=2, **kw)
+        runner.run_to_completion(timeout_sec=300)
+    else:
+        ok, msg = table_matches_oracle(final_state(runner.table), oracle_state(feed_dir))
+        assert ok, msg
+
+    batches = _source_batches(str(tmp_path / "ckpt_cnt"))
+    assert len(batches) >= 2
+    lineage = {
+        int(e["batch_id"].rsplit("-", 1)[1]): e
+        for e in runner.table.current().lineage
+        if str(e.get("batch_id", "")).startswith(runner.batch_id_prefix + "-")
+    }
+    assert sorted(lineage) == sorted(batches)
+    expected = _duckdb_counters(
+        batches, runner.table.current().num_buckets,
+        delay=10 if admission else None, quarantine=admission,
+    )
+    got = {b: {c: e.get(c) for c in COUNTERS} for b, e in lineage.items()}
+    assert got == expected
+    if admission:
+        assert sum(e["filtered_out"] or 0 for e in expected.values()) >= 1
+        assert sum(e["quarantined"] or 0 for e in expected.values()) == 2
 
 
 def test_stream_with_patch_events(spark, tmp_path):
